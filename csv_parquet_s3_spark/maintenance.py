@@ -7,8 +7,11 @@ reference's only maintenance op is the purge (SURVEY.md O13-O22,
 `src/SQL/AutoPurge.sql`); compaction is its natural sibling for an engine
 whose ingest (streaming especially) produces per-trigger files.
 
-Both ops follow the purge module's atomicity pattern: write to a staging
-directory, then swap — readers never observe a half-compacted dataset.
+Every in-place rewrite here (and the index and CDC rewrites elsewhere in
+the package) commits through ONE step, :func:`_staged_overwrite`: write to
+a staging sibling, then swap once — the purge module's atomicity pattern;
+readers never observe a half-rewritten dataset. Versioned artifact roots
+(:func:`ensure_published`) publish through a pointer file instead.
 
 Scale notes: compaction is one distributed read → repartition → write; the
 file-count target derives from dataset bytes, not row counts, so the same
@@ -22,6 +25,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,31 +64,67 @@ def _rm_any(path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+# Staging-sibling markers of an in-place rewrite, ``<path><marker><uuid>``,
+# one per rewrite kind; the swap's rename-aside backup is _BACKUP_MARKER.
+# :func:`_staged_overwrite` writes only these and :func:`vacuum` reaps
+# exactly these.
+STAGING_MARKERS = (
+    "._compact-", "._upsert-", "._zorder-", "._hilbert-", "._delete-",
+    "._bm25-", "._scd1-",
+)
+_BACKUP_MARKER = "._old-"
+
+
 def _atomic_swap(staging: str, final: str) -> None:
-    """Rename-aside swap: the old root moves aside in one rename, the new
-    one renames in, then the backup is removed. NOT fully atomic — between
-    the two renames the final path is briefly absent (true atomicity needs
-    a symlink/manifest indirection); the missing-root window is two renames
-    instead of a whole rmtree, and a crash leaves a recoverable ``._old-*``
-    sibling (see :func:`vacuum`)."""
-    backup = final + "._old-" + uuid.uuid4().hex[:8]
-    os.rename(final, backup)
+    """Rename-aside swap: the old root (if any) moves aside in one rename,
+    the new one renames in, then the backup is removed. NOT fully atomic —
+    between the two renames the final path is briefly absent (true
+    atomicity needs a pointer indirection, see :func:`publish_version`);
+    a crash leaves a recoverable ``._old-*`` sibling (see :func:`vacuum`).
+    Called only by :func:`_staged_overwrite`."""
+    backup = final + _BACKUP_MARKER + uuid.uuid4().hex[:8]
+    if os.path.lexists(final):
+        os.rename(final, backup)
     os.rename(staging, final)
     _rm_any(backup)
 
 
-def _staged_overwrite(df: DataFrame, path: str, marker: str) -> None:
-    """Write ``df`` to a ``<path>.<marker>-<uuid>`` staging sibling and
-    rename-aside-swap it over ``path`` (snappy, one 128 MiB row group per
-    file) — the shared commit step of every rewrite in this module."""
-    staging = path.rstrip("/") + marker + uuid.uuid4().hex[:8]
+def _write_table(df: DataFrame, path: str) -> None:
+    """The rewrite's parquet write: snappy, one 128 MiB row group per file."""
     (
         df.write.mode("overwrite")
         .option("compression", "snappy")
         .option("parquet.block.size", str(PARQUET_BLOCK_SIZE))
-        .parquet(staging)
+        .parquet(path)
     )
+
+
+def _staged_overwrite(
+    content: DataFrame | Callable[[str], None], path: str, marker: str
+) -> None:
+    """THE commit step of every in-place rewrite: write the replacement
+    into a ``<path><marker><uuid>`` staging sibling, then swap it over
+    ``path`` once (:func:`_atomic_swap`). ``content`` is either a frame
+    (written as one table by :func:`_write_table`) or a callable that
+    writes the whole staging directory — a partitioned layout or several
+    tables — so a multi-table artifact commits in one swap. A crash
+    before the swap leaves ``path`` untouched and a staging sibling that
+    :func:`vacuum` reaps."""
+    if marker not in STAGING_MARKERS:
+        raise ValueError(f"unknown staging marker {marker!r}")
+    staging = path.rstrip("/") + marker + uuid.uuid4().hex[:8]
+    if isinstance(content, DataFrame):
+        _write_table(content, staging)
+    else:
+        content(staging)
     _atomic_swap(staging, path)
+
+
+def _merge_by_key(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
+    """``updates ∪ (target ⟕anti updates)``: rows of ``updates`` replace
+    the target rows with the same key, new keys append, untouched rows
+    carry over. One anti-join keyed on ``keys``, no driver round-trip."""
+    return updates.unionByName(target.join(updates, keys, "left_anti"))
 
 
 CURRENT_MARKER = "_CURRENT"
@@ -166,16 +206,14 @@ def ensure_published(
     root: str,
     fingerprint: dict,
     build,
-    consistent=None,
     meta_name: str = "_INDEX_META.json",
 ) -> str:
     """Idempotent build-and-publish for a versioned artifact root: return
-    the active version if its ``meta_name`` equals ``fingerprint`` (and
-    ``consistent(version_dir)`` holds, when given); otherwise call
-    ``build(staging_dir)`` on a fresh ``<root>/v-<uuid>`` and
-    :func:`publish_version` it. The shared skeleton of every index
-    ensure_* (BM25 / MinHash / IVF×PQ): fingerprint guard, crash-marker
-    validity hook, staged build, one-atomic-rename publication.
+    the active version if its ``meta_name`` equals ``fingerprint``;
+    otherwise call ``build(staging_dir)`` on a fresh ``<root>/v-<uuid>``
+    and :func:`publish_version` it. The shared skeleton of every index
+    ensure_* (BM25 / MinHash / IVF×PQ): fingerprint guard, staged build,
+    one-atomic-rename publication.
 
     Hygiene (r09 advisory): a build that THROWS removes its partial
     staging dir before re-raising, and the fingerprint-match fast path
@@ -186,7 +224,7 @@ def ensure_published(
     import json
 
     cur = resolve_published(root)
-    if cur is not None and (consistent is None or consistent(cur)):
+    if cur is not None:
         try:
             with open(os.path.join(cur, meta_name)) as fh:
                 match = json.load(fh) == fingerprint
@@ -294,15 +332,24 @@ def compact(
     those columns, so every output file covers a narrow key range and parquet
     footer min/max stats prune file scans for key predicates.
     """
+    _staged_overwrite(_compacted(spark, path, target_file_bytes, sort_by), path, "._compact-")
+    return parquet_file_count(path)
+
+
+def _compacted(
+    spark: SparkSession,
+    path: str,
+    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    sort_by: list[str] | None = None,
+) -> DataFrame:
+    """The frame :func:`compact` writes: ``path`` in ``ceil(bytes/target)``
+    partitions, range-partitioned and sorted on ``sort_by`` if given."""
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
     df: DataFrame = spark.read.parquet(path)
     if sort_by:
         df = df.repartitionByRange(n_files, *[F.col(c) for c in sort_by])
-        df = df.sortWithinPartitions(*sort_by)
-    else:
-        df = df.coalesce(n_files) if n_files < df.rdd.getNumPartitions() else df.repartition(n_files)
-    _staged_overwrite(df, path, "._compact-")
-    return parquet_file_count(path)
+        return df.sortWithinPartitions(*sort_by)
+    return df.coalesce(n_files) if n_files < df.rdd.getNumPartitions() else df.repartition(n_files)
 
 
 def upsert(
@@ -316,9 +363,8 @@ def upsert(
     over byte-for-byte. Returns (n_updated, n_inserted).
 
     Plain parquet has no row-level MERGE (that's what table formats add);
-    the distributed equivalent is updates ∪ (target ⟕anti updates) with the
-    same staged-swap atomicity as :func:`compact` — one anti-join keyed on
-    the merge key, no driver materialization. The purge module
+    the distributed equivalent is :func:`_merge_by_key` with the same
+    staged-swap atomicity as :func:`compact`. The purge module
     (`purge.Purger._criteria`) is the DELETE of this family
     (`AutoPurge.sql:171-174`); this is the UPSERT.
     """
@@ -328,8 +374,7 @@ def upsert(
     n_inserted = updates.count() - updates.join(
         target.select(*keys).distinct(), keys, "left_semi"
     ).count()
-    merged = updates.unionByName(target.join(updates, keys, "left_anti"))
-    _staged_overwrite(merged, path, "._upsert-")
+    _staged_overwrite(_merge_by_key(target, updates, keys), path, "._upsert-")
     return n_updated, n_inserted
 
 
@@ -376,21 +421,22 @@ def compact_zorder(
 
 
 def vacuum(path: str) -> list[str]:
-    """Remove orphaned staging/backup directories left by a compact/upsert/
-    zorder run that crashed between write and swap. The staged-swap protocol
-    guarantees readers never see partial data, but a crash can leak a
-    ``._compact-*`` / ``._upsert-*`` / ``._zorder-*`` / ``._old-*`` sibling;
-    this is the janitor. Returns the removed paths."""
+    """Remove orphaned staging/backup siblings of ``path`` left by a
+    rewrite that crashed before or during its swap. The staged-swap
+    protocol guarantees readers never see partial data, but a crash can
+    leak a ``<path><marker>*`` sibling for any marker in
+    :data:`STAGING_MARKERS` (or the swap's ``._old-*`` backup); this is
+    the janitor. Returns the removed paths."""
     parent = os.path.dirname(path.rstrip("/")) or "."
     base = os.path.basename(path.rstrip("/"))
     removed = []
     for name in os.listdir(parent):
-        if name.startswith(base + "._") and any(
-            marker in name
-            for marker in ("._compact-", "._upsert-", "._zorder-", "._hilbert-", "._delete-", "._old-")
+        if any(
+            name.startswith(base + marker)
+            for marker in (*STAGING_MARKERS, _BACKUP_MARKER)
         ):
             full = os.path.join(parent, name)
-            shutil.rmtree(full, ignore_errors=True)
+            _rm_any(full)
             removed.append(full)
     return removed
 

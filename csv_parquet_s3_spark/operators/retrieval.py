@@ -489,32 +489,14 @@ def build_bm25_index(spark: SparkSession, docs: DataFrame, index_path: str) -> N
     _bm25_stats(dl).write.mode("overwrite").parquet(f"{index_path}/stats")
 
 
-_BM25_PENDING = "_UPDATE_PENDING"
-
-
-def bm25_index_consistent(index_path: str) -> bool:
-    """False iff an ``update_bm25_index`` run died between its first table
-    mutation and its last: updates drop a pending marker before touching
-    any table and remove it only after df/stats are refreshed, so a
-    surviving marker means merged tf with possibly-stale df/avgdl. Each
-    individual table swap is atomic; the marker makes the CROSS-table
-    window detectable. Heal with a full rebuild or
-    :func:`compact_bm25_index` (whose exact df/stats refresh subsumes the
-    lost delta)."""
-    import os
-
-    return not os.path.exists(os.path.join(index_path, _BM25_PENDING))
-
-
 def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent doc-term-index materialization for the sf_dir's documents
     table, returning the ACTIVE VERSION directory of a versioned root
     (``maintenance.ensure_published``): skip if the published version's
-    fingerprint matches (and no crashed update left it inconsistent), else
-    build a fresh ``v-<uuid>`` version and publish it with one atomic
-    pointer rename — a concurrent reader always resolves a complete index,
-    old or new; the root is never missing (the rename-aside two-rename gap
-    the r08 advisory flagged is gone)."""
+    fingerprint matches, else build a fresh ``v-<uuid>`` version and
+    publish it with one atomic pointer rename — a concurrent reader always
+    resolves a complete index, old or new; the root is never missing (the
+    rename-aside two-rename gap the r08 advisory flagged is gone)."""
     from csv_parquet_s3_spark.maintenance import ensure_published
     from csv_parquet_s3_spark.operators.minhash_index import _documents_fingerprint
 
@@ -529,7 +511,6 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
         lambda staged: build_bm25_index(
             spark, load_table(spark, sf_dir, "documents"), staged
         ),
-        consistent=bm25_index_consistent,
     )
 
 
@@ -606,67 +587,101 @@ def retrieval_bm25_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bm25_serve_from(spark, root)
 
 
-def _staged_overwrite(df: DataFrame, path: str) -> None:
-    """Write ``df`` to a staging sibling and rename-aside-swap it over
-    ``path`` — concurrent readers of a served index never observe a
-    missing/partial table (the r07-advisor hole of plain
-    ``mode('overwrite')``: Spark deletes the target before writing)."""
-    import uuid
+_BM25_TABLES = ("doc_tf", "dl", "df", "stats")
 
-    from csv_parquet_s3_spark.maintenance import _atomic_swap
 
-    staging = path.rstrip("/") + "._refresh-" + uuid.uuid4().hex[:8]
-    df.write.mode("overwrite").parquet(staging)
-    _atomic_swap(staging, path)
+def _commit_bm25_index(index_path: str, tables: dict[str, DataFrame]) -> None:
+    """Write the four index tables into ONE staged copy of the index
+    directory and swap it over ``index_path`` once
+    (``maintenance._staged_overwrite``): a concurrent reader sees the whole
+    old index or the whole new one, and a crash at any step leaves the old
+    index whole plus a ``._bm25-*`` sibling that ``maintenance.vacuum``
+    reaps. Every frame may read the old index — it stays in place until
+    the swap. The index directory holds exactly these four tables."""
+    from csv_parquet_s3_spark.maintenance import _staged_overwrite, _write_table
+
+    def write(staging: str) -> None:
+        for name in _BM25_TABLES:
+            _write_table(tables[name], f"{staging}/{name}")
+
+    _staged_overwrite(write, index_path, "._bm25-")
+
+
+def _bm25_stats_row(spark: SparkSession, index_path: str):
+    """The stored 1-row stats table, collected; layout 3+ (exact sum_dl)."""
+    stats_path = f"{index_path}/stats"
+    stats = spark.read.parquet(stats_path)
+    if "sum_dl" not in stats.columns:
+        raise ValueError(
+            f"{stats_path}: no sum_dl column — index predates bm25_layout 3; "
+            "run a full build (ensure_bm25_index rebuilds on the layout bump)"
+        )
+    return stats.collect()[0]
+
+
+def _bm25_stats_of(spark: SparkSession, n_docs: int, sum_dl: int) -> DataFrame:
+    """The stats table from exact integers, avgdl derived with the same
+    expression as :func:`_bm25_stats` (incremental ≡ full, bit-identical)."""
+    return spark.createDataFrame(
+        [(n_docs, sum_dl)], "n_docs bigint, sum_dl bigint"
+    ).select(
+        "n_docs",
+        "sum_dl",
+        (F.expr("CAST(sum_dl AS DOUBLE)") / F.col("n_docs")).alias("avgdl"),
+    )
+
+
+def _bm25_df_plus(spark: SparkSession, index_path: str, net: DataFrame) -> DataFrame:
+    """The stored df table plus a (token, net) delta; tokens whose df
+    reaches 0 leave the vocabulary."""
+    return (
+        spark.read.parquet(f"{index_path}/df")
+        .join(net, "token", "full_outer")
+        .select(
+            "token",
+            (F.coalesce("df", F.lit(0)) + F.coalesce("net", F.lit(0))).alias("df"),
+        )
+        .filter(F.col("df") > 0)
+    )
 
 
 def update_bm25_index(
     spark: SparkSession, new_docs: DataFrame, index_path: str
 ) -> tuple[int, int]:
     """Incremental index maintenance: tokenize the NEW batch only, MERGE
-    its doc_tf/dl rows by doc_id (`maintenance.upsert` — a re-ingested
-    document's stale tf rows are replaced wholesale, since the anti-join
-    key is the doc), then refresh the collection statistics MONOIDALLY:
+    its doc_tf/dl rows by doc_id (`maintenance._merge_by_key`, the merge
+    `maintenance.upsert` commits — a re-ingested document's stale tf rows
+    are replaced wholesale, since the anti-join key is the doc), then
+    refresh the collection statistics MONOIDALLY:
 
     - ``df`` (docs-per-token) merges a batch-vocabulary-sized delta
       (+count from the batch's tf rows, −count from the replaced docs' tf
-      rows, read batch-bounded BEFORE the merge) into the stored
-      vocabulary-sized table — the merged index is never re-aggregated;
+      rows) into the stored vocabulary-sized table — the merged index is
+      never re-aggregated;
     - ``stats`` updates from exact integers: n_docs' = n_docs − replaced +
       batch, sum_dl' likewise; avgdl is derived with the same
       CAST(sum_dl AS DOUBLE)/n_docs expression the full build uses, so
       incremental ≡ full stays bit-identical.
 
     Per-batch cost is proportional to the batch plus one vocabulary-sized
-    merge; the corpus text and the merged index are never re-read. Every
-    table refresh is a staged write + atomic rename-aside swap, and the
-    whole update is bracketed by a pending marker
-    (:func:`bm25_index_consistent`) so a crash between table swaps is
-    detectable instead of silently serving merged tf against stale df.
+    merge plus the rewrite of the stored tables; the corpus text is never
+    re-read. The four tables commit together in one staged swap
+    (:func:`_commit_bm25_index`).
     Note: the doc_tf merge rewrite loses the build-time doc_id range sort,
     so the query-doc probe loses row-group pruning until
     :func:`compact_bm25_index` restores the layout — correctness is
     unaffected (the serving plan never assumes order).
     Returns (n_docs_updated, n_docs_inserted)."""
-    import os
+    from csv_parquet_s3_spark.maintenance import _merge_by_key
 
-    from csv_parquet_s3_spark.maintenance import upsert
-
-    stats_path = f"{index_path}/stats"
-    old_stats = spark.read.parquet(stats_path)
-    if "sum_dl" not in old_stats.columns:
-        raise ValueError(
-            f"{stats_path}: no sum_dl column — index predates bm25_layout 3; "
-            "run a full build (ensure_bm25_index rebuilds on the layout bump)"
-        )
-    st = old_stats.collect()[0]
-
+    st = _bm25_stats_row(spark, index_path)
     old_tf = spark.read.parquet(f"{index_path}/doc_tf")
     if "dl" not in old_tf.columns:
         raise ValueError(
             f"{index_path}/doc_tf: no dl column — index predates bm25_layout"
             " 4; run a full build (ensure_bm25_index rebuilds on the bump)"
         )
+    old_dl = spark.read.parquet(f"{index_path}/dl")
 
     new_tf = _bm25_doc_tf(new_docs).transform(materialize)
     new_dl = (
@@ -674,33 +689,20 @@ def update_bm25_index(
     )
     new_ids = new_dl.select("doc_id")
 
-    # Batch-bounded pre-reads of everything the merge will replace — pinned
-    # (materialize / collect) BEFORE the upserts rewrite the files they read.
+    # batch-bounded reads of everything the merge replaces
     df_sub = (
         old_tf.join(F.broadcast(new_ids), "doc_id", "left_semi")
         .groupBy("token")
         .agg(F.count("*").alias("sub"))
-        .transform(materialize)
     )
     repl = (
-        spark.read.parquet(f"{index_path}/dl")
-        .join(F.broadcast(new_ids), "doc_id", "left_semi")
+        old_dl.join(F.broadcast(new_ids), "doc_id", "left_semi")
         .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
         .collect()[0]
     )
     batch = new_dl.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
     n_replaced, sum_replaced = repl["n"], repl["s"] or 0
     n_batch, sum_batch = batch["n"], batch["s"] or 0
-
-    pending = os.path.join(index_path, _BM25_PENDING)
-    with open(pending, "w") as fh:
-        fh.write("update in flight — see bm25_index_consistent()\n")
-
-    # layout 4: the merged doc_tf rows carry their doc's dl (batch-bounded
-    # join — a re-ingested doc's rows are replaced wholesale, so the
-    # denormalized column stays exact per doc)
-    upsert(spark, f"{index_path}/doc_tf", new_tf.join(new_dl, "doc_id"), key="doc_id")
-    upsert(spark, f"{index_path}/dl", new_dl, key="doc_id")
 
     df_add = new_tf.groupBy("token").agg(F.count("*").alias("add"))
     net = (
@@ -713,29 +715,22 @@ def update_bm25_index(
         )
         .filter(F.col("net") != 0)
     )
-    df_new = (
-        spark.read.parquet(f"{index_path}/df")
-        .join(net, "token", "full_outer")
-        .select(
-            "token",
-            (F.coalesce("df", F.lit(0)) + F.coalesce("net", F.lit(0))).alias("df"),
-        )
-        .filter(F.col("df") > 0)
+    _commit_bm25_index(
+        index_path,
+        {
+            # layout 4: the merged doc_tf rows carry their doc's dl
+            # (batch-bounded join — a re-ingested doc's rows are replaced
+            # wholesale, so the denormalized column stays exact per doc)
+            "doc_tf": _merge_by_key(old_tf, new_tf.join(new_dl, "doc_id"), ["doc_id"]),
+            "dl": _merge_by_key(old_dl, new_dl, ["doc_id"]),
+            "df": _bm25_df_plus(spark, index_path, net),
+            "stats": _bm25_stats_of(
+                spark,
+                int(st["n_docs"]) - n_replaced + n_batch,
+                int(st["sum_dl"]) - sum_replaced + sum_batch,
+            ),
+        },
     )
-    _staged_overwrite(df_new, f"{index_path}/df")
-
-    new_n = int(st["n_docs"]) - n_replaced + n_batch
-    new_sum = int(st["sum_dl"]) - sum_replaced + sum_batch
-    stats_new = spark.createDataFrame(
-        [(new_n, new_sum)], "n_docs bigint, sum_dl bigint"
-    ).select(
-        "n_docs",
-        "sum_dl",
-        (F.expr("CAST(sum_dl AS DOUBLE)") / F.col("n_docs")).alias("avgdl"),
-    )
-    _staged_overwrite(stats_new, stats_path)
-
-    os.remove(pending)
     return n_replaced, n_batch - n_replaced
 
 
@@ -744,76 +739,44 @@ def delete_from_bm25_index(
 ) -> int:
     """DELETE documents from the stored index — the index-side analog of
     the reference's predicate purge (`AutoPurge.sql:171-174`: keep the
-    anti-set, staged swap): doc_tf/dl drop the victims' rows via a
-    broadcast anti-join rewrite, and df/stats update MONOIDALLY from the
-    victims' rows (read batch-bounded BEFORE the rewrite) — the surviving
-    index is never re-aggregated. Same staged-swap atomicity and pending-
-    marker crash detectability as :func:`update_bm25_index`; same layout
-    caveat (the rewrite loses the range sort until
-    :func:`compact_bm25_index`). Returns the number of docs removed.
+    anti-set, staged swap): doc_tf/dl drop the victims' rows via an
+    anti-join rewrite, and df/stats update MONOIDALLY from the victims'
+    rows — the surviving index is never re-aggregated. Same one-swap
+    commit as :func:`update_bm25_index`; same layout caveat (the rewrite
+    loses the range sort until :func:`compact_bm25_index`). Returns the
+    number of docs removed.
 
     ``doc_ids`` must be a 1-column (doc_id) frame; ids absent from the
-    index are ignored (DELETE semantics, not an error)."""
-    import os
-
-    stats_path = f"{index_path}/stats"
-    old_stats = spark.read.parquet(stats_path)
-    if "sum_dl" not in old_stats.columns:
-        raise ValueError(
-            f"{stats_path}: no sum_dl column — index predates bm25_layout 3; "
-            "run a full build (ensure_bm25_index rebuilds on the layout bump)"
-        )
-    st = old_stats.collect()[0]
+    index are ignored (DELETE semantics, not an error). The victim set is
+    caller-supplied and unbounded, so it is never force-broadcast —
+    CBO/AQE broadcast it when it really is small."""
+    st = _bm25_stats_row(spark, index_path)
     victims = doc_ids.select("doc_id").distinct().transform(materialize)
+    old_tf = spark.read.parquet(f"{index_path}/doc_tf")
+    old_dl = spark.read.parquet(f"{index_path}/dl")
 
-    df_sub = (
-        spark.read.parquet(f"{index_path}/doc_tf")
-        .join(F.broadcast(victims), "doc_id", "left_semi")
-        .groupBy("token")
-        .agg(F.count("*").alias("sub"))
-        .transform(materialize)
-    )
     gone = (
-        spark.read.parquet(f"{index_path}/dl")
-        .join(F.broadcast(victims), "doc_id", "left_semi")
+        old_dl.join(victims, "doc_id", "left_semi")
         .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
         .collect()[0]
     )
     n_gone, sum_gone = gone["n"], gone["s"] or 0
-
-    pending = os.path.join(index_path, _BM25_PENDING)
-    with open(pending, "w") as fh:
-        fh.write("delete in flight — see bm25_index_consistent()\n")
-
-    for table in ("doc_tf", "dl"):
-        kept = spark.read.parquet(f"{index_path}/{table}").join(
-            F.broadcast(victims), "doc_id", "left_anti"
-        )
-        _staged_overwrite(kept, f"{index_path}/{table}")
-
-    df_new = (
-        spark.read.parquet(f"{index_path}/df")
-        .join(df_sub, "token", "full_outer")
-        .select(
-            "token",
-            (F.coalesce("df", F.lit(0)) - F.coalesce("sub", F.lit(0))).alias("df"),
-        )
-        .filter(F.col("df") > 0)
+    net = (
+        old_tf.join(victims, "doc_id", "left_semi")
+        .groupBy("token")
+        .agg((-F.count("*")).alias("net"))
     )
-    _staged_overwrite(df_new, f"{index_path}/df")
-
-    new_n = int(st["n_docs"]) - n_gone
-    new_sum = int(st["sum_dl"]) - sum_gone
-    stats_new = spark.createDataFrame(
-        [(new_n, new_sum)], "n_docs bigint, sum_dl bigint"
-    ).select(
-        "n_docs",
-        "sum_dl",
-        (F.expr("CAST(sum_dl AS DOUBLE)") / F.col("n_docs")).alias("avgdl"),
+    _commit_bm25_index(
+        index_path,
+        {
+            "doc_tf": old_tf.join(victims, "doc_id", "left_anti"),
+            "dl": old_dl.join(victims, "doc_id", "left_anti"),
+            "df": _bm25_df_plus(spark, index_path, net),
+            "stats": _bm25_stats_of(
+                spark, int(st["n_docs"]) - n_gone, int(st["sum_dl"]) - sum_gone
+            ),
+        },
     )
-    _staged_overwrite(stats_new, stats_path)
-
-    os.remove(pending)
     return n_gone
 
 
@@ -864,8 +827,8 @@ def delete_from_bm25_index(
 )
 def retrieval_bm25_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served after DELETING the odd-doc_id half from a full-corpus
-    index (`delete_from_bm25_index` — broadcast anti-join rewrite +
-    monoidal df/stats decrement): hash-equality with a fresh build over the
+    index (`delete_from_bm25_index` — anti-join rewrite + monoidal
+    df/stats decrement): hash-equality with a fresh build over the
     surviving half pins delete ≡ rebuild, the same contract the purge
     module meets for tables (`AutoPurge.sql:171-174`'s keep-the-anti-set
     DELETE, applied to a served index). Completes the index CRUD story:
@@ -886,33 +849,29 @@ def compact_bm25_index(spark: SparkSession, index_path: str) -> None:
     """Post-merge compaction: restore the build-time physical layout and
     the exactly-recomputed statistics that incremental merges chip away at.
 
-    - ``doc_tf`` / ``dl`` rewrite range-sorted by doc_id
-      (`maintenance.compact`), so every output file covers a disjoint
-      doc_id range and the serving probe (``doc_id < N_QUERIES``) is
-      file/row-group-pruned again;
+    - ``doc_tf`` / ``dl`` rewrite range-sorted by doc_id (the frame
+      `maintenance.compact` writes), so every output file covers a
+      disjoint doc_id range and the serving probe (``doc_id < N_QUERIES``)
+      is file/row-group-pruned again;
     - ``df`` / ``stats`` are refreshed by a FULL exact re-aggregate of the
-      compacted index — the compaction cadence is where the exact rebuild
-      belongs; per-batch updates stay monoidal deltas;
-    - any crashed-update pending marker is cleared (the exact refresh
-      subsumes whatever delta the crash lost).
+      index — the compaction cadence is where the exact rebuild belongs;
+      per-batch updates stay monoidal deltas.
 
-    All four refreshes use the same staged-write + atomic-swap as the
-    update path; readers of a served index never see a partial table."""
-    import os
+    All four commit together in the same one-swap step as the update path
+    (:func:`_commit_bm25_index`)."""
+    from csv_parquet_s3_spark.maintenance import _compacted
 
-    from csv_parquet_s3_spark.maintenance import compact
-
-    compact(spark, f"{index_path}/doc_tf", sort_by=["doc_id", "token"])
-    compact(spark, f"{index_path}/dl", sort_by=["doc_id"])
-    doc_tf = spark.read.parquet(f"{index_path}/doc_tf")
-    _staged_overwrite(
-        doc_tf.groupBy("token").agg(F.count("*").alias("df")), f"{index_path}/df"
+    _commit_bm25_index(
+        index_path,
+        {
+            "doc_tf": _compacted(spark, f"{index_path}/doc_tf", sort_by=["doc_id", "token"]),
+            "dl": _compacted(spark, f"{index_path}/dl", sort_by=["doc_id"]),
+            "df": spark.read.parquet(f"{index_path}/doc_tf")
+            .groupBy("token")
+            .agg(F.count("*").alias("df")),
+            "stats": _bm25_stats(spark.read.parquet(f"{index_path}/dl")),
+        },
     )
-    dl = spark.read.parquet(f"{index_path}/dl")
-    _staged_overwrite(_bm25_stats(dl), f"{index_path}/stats")
-    pending = os.path.join(index_path, _BM25_PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)
 
 
 @register(

@@ -741,6 +741,33 @@ def stream_segment_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _scd1_latest(df: DataFrame) -> DataFrame:
+    """Newest row per o_custkey by (o_orderdate, o_orderkey)."""
+    from pyspark.sql import Window as W
+
+    wk = W.partitionBy("o_custkey").orderBy(F.desc("o_orderdate"), F.desc("o_orderkey"))
+    return df.withColumn("rn", F.row_number().over(wk)).filter(F.col("rn") == 1).drop("rn")
+
+
+def _scd1_merge(batch_df: DataFrame, target: str) -> None:
+    """Fold one CDC micro-batch into the current-state table at ``target``
+    and commit it with the shared staged swap
+    (``maintenance._staged_overwrite``): a reader, or a batch that fails
+    mid-write, always sees the previous state whole."""
+    import os
+
+    from csv_parquet_s3_spark.maintenance import _staged_overwrite
+
+    if batch_df.isEmpty():
+        return
+    latest = _scd1_latest(batch_df)
+    if os.path.exists(target):
+        latest = _scd1_latest(
+            batch_df.sparkSession.read.parquet(target).unionByName(latest)
+        )
+    _staged_overwrite(latest, target, "._scd1-")
+
+
 @register(
     "stream_scd1_upsert_priority",
     oracle="""
@@ -771,10 +798,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     format's transactional commit.
     """
     import os
-    import shutil
     import tempfile
-
-    from pyspark.sql import Window as W
 
     path = table_path(sf_dir, "orders")
     schema = spark.read.parquet(path).schema
@@ -786,33 +810,10 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey")
     )
     target = os.path.join(tempfile.mkdtemp(prefix="scd1_stream_"), "current")
-
-    def _latest(df: DataFrame) -> DataFrame:
-        wk = W.partitionBy("o_custkey").orderBy(
-            F.desc("o_orderdate"), F.desc("o_orderkey")
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        latest = _latest(batch_df)
-        if os.path.exists(target):
-            latest = _latest(s.read.parquet(target).unionByName(latest))
-        # staged swap: write beside the live state, then rename — a reader
-        # (or a failed batch) never sees a half-written state.
-        latest.write.mode("overwrite").parquet(target + ".next")
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(target + ".next", target)
-
     q = (
-        stream.writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(
+            lambda batch_df, _batch_id: _scd1_merge(batch_df, target)
+        )
         .option(
             "checkpointLocation",
             os.path.join(tempfile.mkdtemp(prefix="scd1_stream_ck_"), "ck"),

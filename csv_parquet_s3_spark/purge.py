@@ -41,7 +41,6 @@ import datetime
 import logging
 import os
 import re
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -123,29 +122,15 @@ class Purger:
     def _load(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self._table_path(table))
 
-    @staticmethod
-    def _rm(path: str) -> None:
-        """Remove a table artifact whether it is a single file or a directory."""
-        if os.path.isfile(path):
-            os.remove(path)
-        else:
-            shutil.rmtree(path, ignore_errors=True)
-
     def _overwrite(self, table: str, df: DataFrame) -> None:
-        """Atomic-ish rewrite: stage next to the table, then swap.
+        """Staged rewrite through the shared commit step
+        (:func:`csv_parquet_s3_spark.maintenance._staged_overwrite`):
+        stage next to the table, then swap. Mirrors the converter's
+        temp-file + rename commit (CsvToParquetConverter.java:147, :219) at
+        table granularity; works for directory and single-file tables."""
+        from csv_parquet_s3_spark.maintenance import _staged_overwrite
 
-        Mirrors the converter's temp-file + rename commit
-        (CsvToParquetConverter.java:147, :219) at table granularity. Works
-        for both directory tables and single-file tables (the per-file
-        ingest mode produces the latter).
-        """
-        path = self._table_path(table)
-        staging, backup = path + "._staging", path + "._old"
-        df.write.mode("overwrite").parquet(staging)
-        self._rm(backup)
-        os.rename(path, backup)
-        os.rename(staging, path)
-        self._rm(backup)
+        _staged_overwrite(df, self._table_path(table), "._delete-")
 
     # -- actions -----------------------------------------------------------
     def _truncate(self, cfg: PurgeConfig) -> PurgeOutcome:

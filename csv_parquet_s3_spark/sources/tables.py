@@ -53,7 +53,17 @@ def table_path(sf_dir: str, name: str) -> str:
 # Production knob: SPARK_GRAFT_GATE_BYTES overrides the default (read once
 # at import, like every deployment env knob here) — size it to the
 # cluster's broadcast budget per DEPLOYMENT.md; 0 disables all gated hints.
-BROADCAST_GATE_BYTES = int(os.environ.get("SPARK_GRAFT_GATE_BYTES", 64 << 20))
+def _gate_bytes() -> int:
+    raw = os.environ.get("SPARK_GRAFT_GATE_BYTES", str(64 << 20))
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_GATE_BYTES={raw!r}: expected integer bytes"
+        ) from None
+
+
+BROADCAST_GATE_BYTES = _gate_bytes()
 
 _TABLE_BYTES_CACHE: dict[tuple[str, str], int] = {}
 

@@ -351,7 +351,7 @@ def test_publish_resolve_roundtrip_and_vacuum(tmp_path):
     assert os.path.exists(v2), "previous generation vacuumed too early"
 
 
-def test_ensure_published_guard_rebuild_and_consistency(tmp_path):
+def test_ensure_published_guard_and_rebuild(tmp_path):
     import os
 
     from csv_parquet_s3_spark.maintenance import (
@@ -379,13 +379,6 @@ def test_ensure_published_guard_rebuild_and_consistency(tmp_path):
     v2 = ensure_published(root, {"mtime_ns": 2, "format": 1}, build)
     assert len(builds) == 2 and v2 != v1 and resolve_published(root) == v2
     assert os.path.exists(v1)
-
-    # a failing consistency hook forces a rebuild even on a matching print
-    v3 = ensure_published(
-        root, {"mtime_ns": 2, "format": 1}, build, consistent=lambda d: False
-    )
-    assert len(builds) == 3 and v3 != v2
-    assert not os.path.exists(v1) and os.path.exists(v2)
 
 
 def test_publish_concurrent_reader_replay(spark, tmp_path):

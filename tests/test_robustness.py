@@ -26,17 +26,20 @@ def test_merge_schema_evolution(spark, tmp_path):
 
 
 def test_vacuum_removes_orphan_staging(spark, tmp_path):
+    from csv_parquet_s3_spark.maintenance import STAGING_MARKERS
+
     path = str(tmp_path / "ds")
     spark.range(10).write.parquet(path)
-    # simulate a crashed compact/upsert: orphan staging + backup dirs
-    for orphan in (path + "._compact-deadbeef", path + "._upsert-cafe01",
-                   path + "._old-1234abcd"):
+    # simulate crashed rewrites of every kind: orphan staging + backup dirs
+    orphans = [path + m + "deadbeef" for m in STAGING_MARKERS] + [path + "._old-1234abcd"]
+    # a sibling table's staging dir is not this dataset's to reap
+    other = str(tmp_path / "ds2._compact-cafe01")
+    for orphan in orphans + [other]:
         os.makedirs(orphan)
         open(os.path.join(orphan, "part-0.parquet"), "w").write("junk")
 
-    removed = vacuum(path)
-    assert len(removed) == 3
-    assert [d for d in os.listdir(str(tmp_path)) if "._" in d] == []
+    assert sorted(vacuum(path)) == sorted(orphans)
+    assert [d for d in os.listdir(str(tmp_path)) if "._" in d] == ["ds2._compact-cafe01"]
     assert spark.read.parquet(path).count() == 10  # data untouched
 
 

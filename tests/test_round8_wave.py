@@ -9,10 +9,9 @@ OPERATIONAL properties the r07 verdict/advice demanded:
   the actual pruning property, not a plan string);
 - `update_bm25_index` refreshes df/stats monoidally yet lands exactly the
   full rebuild's values (including the new exact `sum_dl`);
-- a crash mid-update is DETECTABLE (pending marker → bm25_index_consistent
-  False; ensure_bm25_index rebuilds; compact_bm25_index heals);
-- every small-table refresh is a staged write + rename-aside swap — the
-  table directory never vanishes mid-overwrite.
+- a crash while an index update, delete or compaction (or an SCD1 merge)
+  is staging leaves readers the whole previous state, and vacuum reaps
+  the staging leftover (fault injection).
 """
 
 from __future__ import annotations
@@ -105,40 +104,6 @@ class TestCompaction:
 
 
 class TestCrashDetectability:
-    def test_pending_marker_flags_inconsistency(self, spark):
-        from csv_parquet_s3_spark.operators.retrieval import (
-            _BM25_PENDING,
-            bm25_index_consistent,
-            compact_bm25_index,
-        )
-
-        idx = _build_half_update_half(spark)
-        assert bm25_index_consistent(idx)
-        # simulate a crash between the doc_tf merge and the stats refresh
-        with open(os.path.join(idx, _BM25_PENDING), "w") as fh:
-            fh.write("crash\n")
-        assert not bm25_index_consistent(idx)
-        compact_bm25_index(spark, idx)  # exact refresh subsumes the lost delta
-        assert bm25_index_consistent(idx)
-
-    def test_ensure_rebuilds_inconsistent_root(self, spark):
-        from csv_parquet_s3_spark.operators.retrieval import (
-            _BM25_PENDING,
-            ensure_bm25_index,
-        )
-
-        root = ensure_bm25_index(spark, SF_SMOKE)
-        pending = os.path.join(root, _BM25_PENDING)
-        with open(pending, "w") as fh:
-            fh.write("crash\n")
-        root2 = ensure_bm25_index(spark, SF_SMOKE)
-        # the inconsistent version is replaced by a freshly published one
-        # (and lingers one generation under the keep-one vacuum policy —
-        # readers mid-scan on it keep working; the next publish reaps it)
-        assert root2 != root and os.path.dirname(root2) == os.path.dirname(root)
-        assert os.path.exists(root), "previous generation vacuumed too early"
-        assert not os.path.exists(os.path.join(root2, _BM25_PENDING))
-
     def test_update_requires_layout3_stats(self, spark):
         from csv_parquet_s3_spark.operators.retrieval import update_bm25_index
 
@@ -156,24 +121,95 @@ class TestCrashDetectability:
             update_bm25_index(spark, _docs(spark).limit(3), tmp)
 
 
-class TestStagedSwaps:
-    def test_small_table_refresh_never_removes_target_first(self, spark, monkeypatch):
-        """_staged_overwrite must build the replacement BESIDE the live
-        table: at the moment the swap begins, both staging and target
-        exist (rename-aside), so a reader never sees the directory gone."""
-        import csv_parquet_s3_spark.maintenance as maintenance
+def _crash_after_staged_write(monkeypatch, hit) -> None:
+    """Fault injection: every parquet write whose path satisfies ``hit``
+    writes its files and then raises — a crash between a staged write and
+    the swap that would commit it."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
-        observed = []
-        real_swap = maintenance._atomic_swap
+    real = DataFrameWriter.parquet
 
-        def spying_swap(staging, final):
-            observed.append((os.path.exists(staging), os.path.exists(final)))
-            real_swap(staging, final)
+    def parquet(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if hit(path):
+            raise RuntimeError(f"injected fault after writing {path}")
 
-        monkeypatch.setattr(maintenance, "_atomic_swap", spying_swap)
-        idx = _build_half_update_half(spark)
-        assert observed, "update path did not route through _atomic_swap"
-        assert all(s and f for s, f in observed)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+class TestFaultInjection:
+    """Every in-place rewrite commits through one staged swap: a crash in
+    the middle of staging leaves readers the whole previous state, and
+    ``maintenance.vacuum`` reaps the staging leftover."""
+
+    @pytest.mark.parametrize("op", ["update", "delete", "compact"])
+    def test_bm25_rewrite_failing_at_third_table_keeps_old_index(
+        self, spark, monkeypatch, op
+    ):
+        from csv_parquet_s3_spark.maintenance import vacuum
+        from csv_parquet_s3_spark.operators import retrieval as R
+
+        docs = _docs(spark)
+        idx = tempfile.mkdtemp(prefix="bm25_fault_")
+        R.build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
+        odd = docs.filter(F.col("doc_id") % 2 == 1)
+        run = {
+            "update": lambda: R.update_bm25_index(spark, odd, idx),
+            "delete": lambda: R.delete_from_bm25_index(
+                spark, docs.filter(F.col("doc_id") % 4 == 0).select("doc_id"), idx
+            ),
+            "compact": lambda: R.compact_bm25_index(spark, idx),
+        }[op]
+        ranking = _rows(R._bm25_serve_from(spark, idx))
+        tables = {t: _rows(spark.read.parquet(f"{idx}/{t}")) for t in R._BM25_TABLES}
+
+        # the third table the commit stages is df
+        _crash_after_staged_write(
+            monkeypatch, lambda p: "._bm25-" in p and p.endswith("/df")
+        )
+        with pytest.raises(RuntimeError, match="injected fault"):
+            run()
+        monkeypatch.undo()
+
+        assert _rows(R._bm25_serve_from(spark, idx)) == ranking
+        for t, rows in tables.items():
+            assert _rows(spark.read.parquet(f"{idx}/{t}")) == rows, t
+        (leftover,) = vacuum(idx)
+        assert "._bm25-" in leftover and not os.path.exists(leftover)
+        assert vacuum(idx) == []
+
+    def test_scd1_merge_failing_mid_stage_keeps_previous_state(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from csv_parquet_s3_spark.maintenance import vacuum
+        from csv_parquet_s3_spark.operators.streaming_batch import (
+            _scd1_latest,
+            _scd1_merge,
+        )
+        from csv_parquet_s3_spark.sources.tables import load_table
+
+        orders = load_table(spark, SF_SMOKE, "orders").select(
+            "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
+        )
+        first = orders.filter(F.col("o_orderkey") % 2 == 0)
+        second = orders.filter(F.col("o_orderkey") % 2 == 1)
+        target = str(tmp_path / "current")
+        _scd1_merge(first, target)
+        state = _rows(spark.read.parquet(target))
+        final = _rows(_scd1_latest(orders))
+        assert state != final, "fixture: the second batch must change the state"
+
+        _crash_after_staged_write(monkeypatch, lambda p: "._scd1-" in p)
+        with pytest.raises(RuntimeError, match="injected fault"):
+            _scd1_merge(second, target)
+        monkeypatch.undo()
+
+        assert _rows(spark.read.parquet(target)) == state
+        (leftover,) = vacuum(target)
+        assert "._scd1-" in leftover and not os.path.exists(leftover)
+        # the replayed batch commits on top of the intact previous state
+        _scd1_merge(second, target)
+        assert _rows(spark.read.parquet(target)) == final
 
 
 class TestMapOnlyBigrams:
@@ -483,9 +519,8 @@ class TestIvfIndexLayout:
     """The inverted lists must BE inverted on disk: post-build (and
     post-compaction after a merge) each list owns its own ``list_id=N/``
     directory (format 4), and the serving plan prunes unprobed lists'
-    directories at FILE-LISTING time — join-triggered dynamic partition
-    pruning by default, a static ``In(list_id, …)`` partition filter in
-    collect mode — together these make probe cost Σ|probed lists|, not
+    directories at FILE-LISTING time by join-triggered dynamic partition
+    pruning — together these make probe cost Σ|probed lists|, not
     corpus."""
 
     @staticmethod
@@ -533,7 +568,7 @@ class TestIvfIndexLayout:
         assert len(dirs2) > 1 and all(n == 1 for n in dirs2.values()), dirs2
         assert _rows(_serve_plain_ivf(spark, emb, idx)) == before
 
-    def test_probe_prunes_unprobed_list_dirs(self, spark, tmp_path, monkeypatch):
+    def test_probe_prunes_unprobed_list_dirs(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.similarity import N_PROBE, N_QUERIES
         from csv_parquet_s3_spark.operators.similarity_index import (
             _SEEDS,
@@ -547,30 +582,19 @@ class TestIvfIndexLayout:
         build_ivf_index(spark, emb, _SEEDS, idx)
         queries = emb.filter(F.col("vec_id") < N_QUERIES)
 
-        def plan() -> str:
-            return (
-                topk_from_index(spark, queries, idx, N_PROBE)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-
-        monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "dpp")
-        p = plan()
+        p = (
+            topk_from_index(spark, queries, idx, N_PROBE)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
         assert "dynamicpruningexpression" in p, p[:2000]
-        rows_dpp = _rows(topk_from_index(spark, queries, idx, N_PROBE))
 
-        monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "collect")
-        p = plan()
-        assert "PartitionFilters: [list_id" in p and " IN (" in p, p[:2000]
-        # the modes differ only in HOW the probed-list set reaches the scan
-        assert _rows(topk_from_index(spark, queries, idx, N_PROBE)) == rows_dpp
-
-    def test_unprobed_list_files_are_never_read(self, spark, tmp_path, monkeypatch):
+    def test_unprobed_list_files_are_never_read(self, spark, tmp_path):
         """RUNTIME proof of list pruning, stronger than any plan string:
         overwrite every parquet file of the lists the probe does NOT touch
         with garbage bytes — serving must still return the exact same
-        rows in BOTH modes, because those directories' contents are never
+        rows, because those directories' contents are never
         opened. The control corrupts a probed list too and expects the
         scan to blow up (so the test cannot pass vacuously)."""
         import glob
@@ -622,9 +646,7 @@ class TestIvfIndexLayout:
 
         for lid in unprobed:
             corrupt(lid)
-        for mode in ("dpp", "collect"):
-            monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", mode)
-            assert _rows(topk_from_index(spark, queries, idx, N_PROBE)) == before
+        assert _rows(topk_from_index(spark, queries, idx, N_PROBE)) == before
 
         corrupt(next(iter(probed)))  # control: a PROBED list must be read
         with pytest.raises(Exception):
@@ -637,7 +659,7 @@ class TestIvfPqIndexLayout:
     scan to the probed lists — codes live INSIDE the inverted lists."""
 
     @pytest.mark.slow
-    def test_codes_clustered_and_probe_pruning(self, spark, tmp_path, monkeypatch):
+    def test_codes_clustered_and_probe_pruning(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.similarity import N_QUERIES
         from csv_parquet_s3_spark.operators.similarity_index import (
             build_ivf_pq_index,
@@ -659,7 +681,6 @@ class TestIvfPqIndexLayout:
 
         queries = emb.filter(F.col("vec_id") < N_QUERIES)
         for fn in (ivf_pq_topk_from_index, sq8_topk_from_index):
-            monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "dpp")
             p = (
                 fn(spark, queries, idx)
                 ._jdf.queryExecution()
@@ -667,14 +688,6 @@ class TestIvfPqIndexLayout:
                 .toString()
             )
             assert p.count("dynamicpruningexpression") >= 2, (fn.__name__, p[:1500])
-            monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "collect")
-            p = (
-                fn(spark, queries, idx)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert p.count("PartitionFilters: [list_id") >= 2, (fn.__name__, p[:1500])
 
 
 class TestDeleteRowsEdges:

@@ -2,18 +2,13 @@
 for the stored-index serving entries — the r09-verdict bisect for
 `sim_cosine_topk_ivf_pq_refine`'s elevation.
 
-Arms, interleaved rep-by-rep in ONE session (host drift cancels — the
-same discipline as tools/ab_probe_modes.py, which this extends):
+Arms, interleaved rep-by-rep in ONE session (host drift cancels):
 
-  fmt4_dpp      directory-per-list layout, broadcast-probes DPP serving
-                (the shipped default)
-  fmt4_collect  directory-per-list layout, bounded probe-collect →
-                static In(list_id, …) partition filter
-  flat_dpp      ONE list_id-sorted file per artifact (the format-3
+  fmt4          directory-per-list layout, broadcast-probes DPP serving
+                (the shipped layout)
+  flat          ONE list_id-sorted file per artifact (the format-3
                 physical shape), probes joined (no partition dirs to
                 prune — the join restricts rows, footers restrict pages)
-  flat_collect  same flat artifact, static isin filter → row-group
-                min/max pruning only
 
 If fmt4 arms are slower at sf0.1, the per-list directory scan setup
 (8 dirs × 1 tiny file, listing + task per file) is the small-SF cost —
@@ -99,12 +94,7 @@ def main() -> None:
             return sq8_topk_from_index(spark, queries, root)
         return ivf_pq_refined_topk(spark, queries, emb, root)
 
-    ARMS = {
-        "fmt4_dpp": (fmt4_root, "dpp"),
-        "fmt4_collect": (fmt4_root, "collect"),
-        "flat_dpp": (flat_root, "dpp"),
-        "flat_collect": (flat_root, "collect"),
-    }
+    ARMS = {"fmt4": fmt4_root, "flat": flat_root}
 
     def anchor() -> float:
         ts = []
@@ -123,8 +113,7 @@ def main() -> None:
         }
         for _rep in range(reps):
             for kind in QUERY_KINDS:
-                for arm, (root, mode) in ARMS.items():
-                    os.environ["SPARK_GRAFT_IVF_PROBE"] = mode
+                for arm, root in ARMS.items():
                     t0 = time.perf_counter()
                     with released_after(spark):
                         serve(kind, root).write.format("noop").mode(
@@ -135,9 +124,8 @@ def main() -> None:
                     )
         a_post = anchor()
 
-        # sanity: every arm must produce the same answer (layout and probe
-        # mode are physical choices, never semantic ones)
-        os.environ.pop("SPARK_GRAFT_IVF_PROBE", None)
+        # sanity: every arm must produce the same answer (the layout is a
+        # physical choice, never a semantic one)
         for kind in QUERY_KINDS:
             base = sorted(map(tuple, serve(kind, fmt4_root).collect()))
             flat = sorted(map(tuple, serve(kind, flat_root).collect()))
@@ -158,7 +146,6 @@ def main() -> None:
         }
         print(json.dumps(out), flush=True)
     finally:
-        os.environ.pop("SPARK_GRAFT_IVF_PROBE", None)
         shutil.rmtree(flat_root, ignore_errors=True)
 
 
