@@ -32,6 +32,7 @@ def _pipeline(args: argparse.Namespace) -> int:
     from csv_parquet_s3_spark.ingest import convert_csv_to_parquet
     from csv_parquet_s3_spark.session import get_spark
     from csv_parquet_s3_spark.sinks.s3 import configure_s3a, sink_path
+    from csv_parquet_s3_spark.sources.tables import read_parquet
 
     props = validate(load_properties(args.config), require_s3=not args.skip_upload)
     spark = get_spark(app_name="csv_parquet_s3_pipeline")
@@ -51,7 +52,7 @@ def _pipeline(args: argparse.Namespace) -> int:
         configure_s3a(spark, props)
         uri = sink_path(props["bucketName"], props.get("prefix", ""))
         # upload exactly this run's outputs (not a stale directory re-list)
-        df = spark.read.parquet(*report.converted)
+        df = read_parquet(spark, *report.converted)
         df.write.mode("overwrite").option("compression", "snappy").parquet(uri)
         logger.info("uploaded %d files to %s", len(report.converted), uri)
 
@@ -99,6 +100,7 @@ def _corpus(args: argparse.Namespace) -> int:
     )
     from csv_parquet_s3_spark.operators.sampling import hash_split
     from csv_parquet_s3_spark.session import get_spark
+    from csv_parquet_s3_spark.sources.tables import read_parquet
 
     spark = get_spark(app_name="csv_parquet_s3_corpus")
     typed = convert_csv_dir(
@@ -118,7 +120,7 @@ def _corpus(args: argparse.Namespace) -> int:
     hash_split(keep, "doc_id").write.mode("overwrite").parquet(final_path)
     n_files = compact(spark, final_path)
 
-    n_kept = spark.read.parquet(final_path).count()
+    n_kept = read_parquet(spark, final_path).count()
     logger.info(
         "corpus pipeline: %d raw docs -> %d kept (%d near-dups removed), %d file(s) at %s",
         n_raw, n_kept, n_raw - n_kept, n_files, final_path,
@@ -132,6 +134,7 @@ def _query(args: argparse.Namespace) -> int:
     parquet sink — the ad-hoc front door to the 100+ operator surface."""
     from csv_parquet_s3_spark.operators import QUERIES
     from csv_parquet_s3_spark.session import get_spark
+    from csv_parquet_s3_spark.sources.tables import read_parquet
 
     if args.list:
         for name in sorted(QUERIES):
@@ -144,7 +147,7 @@ def _query(args: argparse.Namespace) -> int:
     df = QUERIES[args.name](spark, args.sf_dir)
     if args.out:
         df.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
+        n = read_parquet(spark, args.out).count()
         logger.info("%s: %d row(s) written to %s", args.name, n, args.out)
     else:
         rows = df.limit(args.show).collect()

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.schema import FieldSpec, load_schema, raw_struct_type
 from csv_parquet_s3_spark.session import PARQUET_BLOCK_SIZE
+from csv_parquet_s3_spark.sources.tables import read_parquet
 
 logger = logging.getLogger(__name__)
 
@@ -232,7 +233,7 @@ def convert_csv_dir(
         check_strict(spark, glob, specs)
     df, _ = parse_csv(spark, glob, specs)
     _write_parquet(df, out_dir)
-    return spark.read.parquet(out_dir)
+    return read_parquet(spark, out_dir)
 
 
 def convert_with_quarantine(
@@ -282,6 +283,6 @@ def convert_with_quarantine(
     bad = flagged.filter(F.size("_bad_fields") > 0)
     _write_parquet(good, out_dir)
     _write_parquet(bad, quarantine_dir)
-    n_good = spark.read.parquet(out_dir).count()
-    n_bad = spark.read.parquet(quarantine_dir).count()
+    n_good = read_parquet(spark, out_dir).count()
+    n_bad = read_parquet(spark, quarantine_dir).count()
     return n_good, n_bad

@@ -27,10 +27,11 @@ import shutil
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.session import PARQUET_BLOCK_SIZE
+from csv_parquet_s3_spark.sources.tables import read_parquet
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024  # one row group per file
 
@@ -274,7 +275,7 @@ def delete_rows(
     a shuffled semi/anti join above that (r12 verdict #3)."""
     keys = [key] if isinstance(key, str) else list(key)
     vic = victims.select(*keys).distinct()
-    target = spark.read.parquet(path)
+    target = read_parquet(spark, path)
     n_gone = target.join(vic, keys, "left_semi").count()
     if n_gone == 0:
         return 0
@@ -305,9 +306,11 @@ def delete_where(
     Returns ``(status, rows_matched, rows_kept)`` with status in
     ``{'purged', 'aborted', 'dry_run'}``; rows_kept is ``-1`` unless a
     delete ran to completion (the 0-match case reports status 'purged'
-    with the dataset's full row count kept, without rewriting it).
+    with the dataset's full row count kept, without rewriting it). A
+    rewrite counts the rows it keeps with an ``observe()`` metric on the
+    staged write, not a second pass over the new table.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     pred = F.coalesce(F.expr(where), F.lit(False))
     matched = df.filter(pred).count()
     if guard_max is not None and matched > guard_max:
@@ -316,8 +319,11 @@ def delete_where(
         return "dry_run", matched, -1
     if matched == 0:
         return "purged", 0, df.count()
-    _staged_overwrite(df.filter(~pred), path, "._delete-")
-    return "purged", matched, spark.read.parquet(path).count()
+    kept = Observation()
+    _staged_overwrite(
+        df.filter(~pred).observe(kept, F.count(F.lit(1)).alias("rows")), path, "._delete-"
+    )
+    return "purged", matched, kept.get["rows"]
 
 
 def compact(
@@ -345,7 +351,7 @@ def _compacted(
     """The frame :func:`compact` writes: ``path`` in ``ceil(bytes/target)``
     partitions, range-partitioned and sorted on ``sort_by`` if given."""
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
-    df: DataFrame = spark.read.parquet(path)
+    df: DataFrame = read_parquet(spark, path)
     if sort_by:
         df = df.repartitionByRange(n_files, *[F.col(c) for c in sort_by])
         return df.sortWithinPartitions(*sort_by)
@@ -369,7 +375,7 @@ def upsert(
     (`AutoPurge.sql:171-174`); this is the UPSERT.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    target = spark.read.parquet(path)
+    target = read_parquet(spark, path)
     n_updated = target.join(updates.select(*keys).distinct(), keys, "left_semi").count()
     n_inserted = updates.count() - updates.join(
         target.select(*keys).distinct(), keys, "left_semi"
@@ -414,7 +420,7 @@ def compact_zorder(
     one-off cost that buys stats-based pruning on every subsequent scan
     (same trade as any Z-order OPTIMIZE). Returns the new file count."""
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
-    df = spark.read.parquet(path).withColumn("_z", _zorder_col(zorder_by))
+    df = read_parquet(spark, path).withColumn("_z", _zorder_col(zorder_by))
     df = df.repartitionByRange(n_files, F.col("_z")).sortWithinPartitions("_z").drop("_z")
     _staged_overwrite(df, path, "._zorder-")
     return parquet_file_count(path)
@@ -522,7 +528,7 @@ def compact_hilbert(
     count."""
     bits = min(bits, 63 // max(1, len(hilbert_by)))
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     buckets = []
     for j, c in enumerate(hilbert_by):
         df = df.withColumn(

@@ -23,7 +23,7 @@ from csv_parquet_s3_spark.operators.dedup import (
     verified_pairs_from_signatures,
 )
 from csv_parquet_s3_spark.operators.registry import ORACLES, register
-from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 
@@ -57,7 +57,7 @@ def update_index(spark: SparkSession, new_docs: DataFrame, index_path: str) -> t
 
 def pairs_from_index(spark: SparkSession, index_path: str) -> DataFrame:
     """Jaccard-verified near-dup pairs straight from the stored index."""
-    return verified_pairs_from_signatures(spark.read.parquet(index_path))
+    return verified_pairs_from_signatures(read_parquet(spark, index_path))
 
 
 def pairs_against_index(
@@ -79,7 +79,7 @@ def pairs_against_index(
     # ContextCleaner on GC (a bare persist() here leaked cache — there is no
     # in-function point where the lazy result has materialized).
     new_sigs = signature_table(_shingles_of(new_docs)).transform(materialize)
-    idx_sigs = spark.read.parquet(index_path)
+    idx_sigs = read_parquet(spark, index_path)
     nb = bands_from_signatures(new_sigs).alias("n")
     ib = bands_from_signatures(idx_sigs).alias("i")
     candidates = (

@@ -28,7 +28,7 @@ from csv_parquet_s3_spark.operators.similarity import (
     _dot,
     _with_norm,
 )
-from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 N_QUERIES = 5   # doc_id < 5 are the probe queries (same convention as similarity)
@@ -305,11 +305,10 @@ def _bm25_doc_tf(docs: DataFrame) -> DataFrame:
     return toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
 
 
-def _bm25_rank(enriched: DataFrame) -> DataFrame:
-    """The BM25 scoring + per-query top-k tail over rows that already carry
-    every needed quantity: (query_id, doc_id, tf, dl, df, n_docs, avgdl).
-    Per-term contributions partial-aggregate map-side; only (query, doc,
-    score) rows shuffle for the per-query top-k."""
+def _bm25_term_score() -> F.Column:
+    """One (query term, doc) BM25 contribution over the columns tf, dl, df,
+    n_docs and avgdl: 6-digit idf times the saturated, length-normalized
+    tf, rounded to 6 digits as DECIMAL(20,6)."""
     idf6 = F.round(
         F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)), 6
     )
@@ -318,9 +317,16 @@ def _bm25_rank(enriched: DataFrame) -> DataFrame:
         * (BM25_K1 + 1.0)
         / (F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")))
     )
-    term_score = F.round(idf6 * tf_w, 6).cast("decimal(20,6)")
+    return F.round(idf6 * tf_w, 6).cast("decimal(20,6)")
+
+
+def _bm25_rank(enriched: DataFrame) -> DataFrame:
+    """The BM25 scoring + per-query top-k tail over rows that already carry
+    every needed quantity: (query_id, doc_id, tf, dl, df, n_docs, avgdl).
+    Per-term contributions partial-aggregate map-side; only (query, doc,
+    score) rows shuffle for the per-query top-k."""
     scored = enriched.groupBy("query_id", "doc_id").agg(
-        F.sum(term_score).alias("score_sum")
+        F.sum(_bm25_term_score()).alias("score_sum")
     )
     wq = W.partitionBy("query_id").orderBy(F.desc("score_sum"), F.asc("doc_id"))
     return (
@@ -536,7 +542,7 @@ def _bm25_stats_scalars(spark: SparkSession, index_path: str) -> tuple[int, floa
             )
         except (ImportError, OSError, ValueError):
             pass
-    row = spark.read.parquet(path).select("n_docs", "avgdl").collect()[0]
+    row = read_parquet(spark, path).select("n_docs", "avgdl").collect()[0]
     return int(row["n_docs"]), float(row["avgdl"])
 
 
@@ -548,13 +554,13 @@ def _bm25_serve_from(spark: SparkSession, index_path: str) -> DataFrame:
     literals (no stats scan, no cross-join) — the scoring pass reads
     doc_tf once, probes it once for query terms, and broadcast-joins the
     vocabulary-sized df table."""
-    doc_tf = spark.read.parquet(f"{index_path}/doc_tf")
+    doc_tf = read_parquet(spark, f"{index_path}/doc_tf")
     if "dl" not in doc_tf.columns:
         raise ValueError(
             f"{index_path}/doc_tf: no dl column — index predates bm25_layout"
             " 4; run a full build (ensure_bm25_index rebuilds on the bump)"
         )
-    df = spark.read.parquet(f"{index_path}/df")
+    df = read_parquet(spark, f"{index_path}/df")
     n_docs, avgdl = _bm25_stats_scalars(spark, index_path)
     qterms = doc_tf.filter(F.col("doc_id") < N_QUERIES).select(
         F.col("doc_id").alias("query_id"), "token"
@@ -610,7 +616,7 @@ def _commit_bm25_index(index_path: str, tables: dict[str, DataFrame]) -> None:
 def _bm25_stats_row(spark: SparkSession, index_path: str):
     """The stored 1-row stats table, collected; layout 3+ (exact sum_dl)."""
     stats_path = f"{index_path}/stats"
-    stats = spark.read.parquet(stats_path)
+    stats = read_parquet(spark, stats_path)
     if "sum_dl" not in stats.columns:
         raise ValueError(
             f"{stats_path}: no sum_dl column — index predates bm25_layout 3; "
@@ -635,7 +641,7 @@ def _bm25_df_plus(spark: SparkSession, index_path: str, net: DataFrame) -> DataF
     """The stored df table plus a (token, net) delta; tokens whose df
     reaches 0 leave the vocabulary."""
     return (
-        spark.read.parquet(f"{index_path}/df")
+        read_parquet(spark, f"{index_path}/df")
         .join(net, "token", "full_outer")
         .select(
             "token",
@@ -675,13 +681,13 @@ def update_bm25_index(
     from csv_parquet_s3_spark.maintenance import _merge_by_key
 
     st = _bm25_stats_row(spark, index_path)
-    old_tf = spark.read.parquet(f"{index_path}/doc_tf")
+    old_tf = read_parquet(spark, f"{index_path}/doc_tf")
     if "dl" not in old_tf.columns:
         raise ValueError(
             f"{index_path}/doc_tf: no dl column — index predates bm25_layout"
             " 4; run a full build (ensure_bm25_index rebuilds on the bump)"
         )
-    old_dl = spark.read.parquet(f"{index_path}/dl")
+    old_dl = read_parquet(spark, f"{index_path}/dl")
 
     new_tf = _bm25_doc_tf(new_docs).transform(materialize)
     new_dl = (
@@ -752,8 +758,8 @@ def delete_from_bm25_index(
     CBO/AQE broadcast it when it really is small."""
     st = _bm25_stats_row(spark, index_path)
     victims = doc_ids.select("doc_id").distinct().transform(materialize)
-    old_tf = spark.read.parquet(f"{index_path}/doc_tf")
-    old_dl = spark.read.parquet(f"{index_path}/dl")
+    old_tf = read_parquet(spark, f"{index_path}/doc_tf")
+    old_dl = read_parquet(spark, f"{index_path}/dl")
 
     gone = (
         old_dl.join(victims, "doc_id", "left_semi")
@@ -866,10 +872,10 @@ def compact_bm25_index(spark: SparkSession, index_path: str) -> None:
         {
             "doc_tf": _compacted(spark, f"{index_path}/doc_tf", sort_by=["doc_id", "token"]),
             "dl": _compacted(spark, f"{index_path}/dl", sort_by=["doc_id"]),
-            "df": spark.read.parquet(f"{index_path}/doc_tf")
+            "df": read_parquet(spark, f"{index_path}/doc_tf")
             .groupBy("token")
             .agg(F.count("*").alias("df")),
-            "stats": _bm25_stats(spark.read.parquet(f"{index_path}/dl")),
+            "stats": _bm25_stats(read_parquet(spark, f"{index_path}/dl")),
         },
     )
 

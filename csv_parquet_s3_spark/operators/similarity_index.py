@@ -34,7 +34,7 @@ from csv_parquet_s3_spark.operators.similarity import (
     _dot,
     _with_norm,
 )
-from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 
@@ -76,7 +76,7 @@ def _read_lists(spark: SparkSession, path: str) -> DataFrame:
     before pruning (UnwrapCastInBinaryComparison), so partition filters
     still reach the directory listing (plan-pinned in
     tests/test_round8_wave.py)."""
-    return spark.read.parquet(path).withColumn(
+    return read_parquet(spark, path).withColumn(
         "list_id", F.col("list_id").cast("bigint")
     )
 
@@ -128,7 +128,7 @@ def build_ivf_index(
             )
         )
     cent.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    stored_cent = spark.read.parquet(f"{index_path}/centroids")
+    stored_cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _assign(emb.select("vec_id", "vd", "norm"), stored_cent)
     # Physically cluster the inverted lists: hive-partition by list_id so
     # each list IS a directory (see _write_list_clustered). The per-query
@@ -142,7 +142,7 @@ def update_ivf_index(spark: SparkSession, new_vectors: DataFrame, index_path: st
     """Incremental: assign the new batch against the STORED quantizer and
     merge by vec_id (re-ingested vectors get reassigned). Returns
     (n_updated, n_inserted)."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _assign(_with_norm(new_vectors).select("vec_id", "vd", "norm"), cent)
     return upsert(spark, f"{index_path}/assign", assign, key="vec_id")
 
@@ -157,7 +157,7 @@ def topk_from_index(
     broadcast probes frame lets dynamic partition pruning skip unprobed
     directories inside the same job (collect-free — no driver
     round-trip)."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _read_lists(spark, f"{index_path}/assign")
     q = _with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
@@ -1425,7 +1425,7 @@ def build_ivf_pq_index(spark: SparkSession, emb: DataFrame, index_path: str) -> 
         )
     )
     cent.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    cent_s = spark.read.parquet(f"{index_path}/centroids")
+    cent_s = read_parquet(spark, f"{index_path}/centroids")
     k = cent_s.count()
     _write_list_clustered(
         _assign(vec, cent_s).select("vec_id", "list_id"),
@@ -1436,7 +1436,7 @@ def build_ivf_pq_index(spark: SparkSession, emb: DataFrame, index_path: str) -> 
 
     books = train_pq_codebooks(spark, emb)
     books.write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    books_s = spark.read.parquet(f"{index_path}/codebooks")
+    books_s = read_parquet(spark, f"{index_path}/codebooks")
     _write_list_clustered(
         pq_encode(emb, books_s).join(assign_s, "vec_id"), k, f"{index_path}/codes"
     )
@@ -1471,7 +1471,7 @@ def ivf_pq_topk_from_index(
     assignment, and ADC-ranks their codes. Per-query cost is
     (nprobe/K)·corpus code lookups; the raw embedding column is never read
     at query time."""
-    books = spark.read.parquet(f"{index_path}/codebooks")
+    books = read_parquet(spark, f"{index_path}/codebooks")
     candidates, probes = _stored_coarse_candidates(spark, queries, index_path, nprobe)
     codes = _restrict_to_probed(
         _read_lists(spark, f"{index_path}/codes"), probes
@@ -1490,7 +1490,7 @@ def _stored_coarse_candidates(
     what the caller hands :func:`_restrict_to_probed` so every per-list
     artifact scan skips the unprobed lists' directories by join-triggered
     dynamic partition pruning."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _read_lists(spark, f"{index_path}/coarse_assign")
     q = _with_norm(queries).select("vec_id", "vd", "norm")
     wq = W.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("list_id"))
@@ -1568,7 +1568,7 @@ def _sq8_stats_vectors(
             return [t["mn"][i] for i in order], [t["mx"][i] for i in order]
         except (ImportError, OSError, ValueError):
             pass
-    rows = spark.read.parquet(path).orderBy("dim").collect()
+    rows = read_parquet(spark, path).orderBy("dim").collect()
     return [r["mn"] for r in rows], [r["mx"] for r in rows]
 
 
@@ -1931,7 +1931,7 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
     from csv_parquet_s3_spark.maintenance import _staged_overwrite
 
     path = f"{index_path}/assign"
-    k = spark.read.parquet(f"{index_path}/centroids").count()
+    k = read_parquet(spark, f"{index_path}/centroids").count()
     lists = _read_lists(spark, path)
     _staged_overwrite(
         lambda staging: _write_list_clustered(lists, int(k), staging),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.operators.registry import register
-from csv_parquet_s3_spark.sources.tables import load_table, table_path
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet, table_path
 from csv_parquet_s3_spark.streaming.events_stream import (
     hourly_event_rollup,
     session_window_counts,
@@ -36,7 +36,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the batch loader (nanos-int64 and timestamp_ntz vintages both → LTZ)."""
     path = table_path(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     # FileStreamSource wants a DIRECTORY; select just the events file from
     # the shared sf dir with a glob filter.
     stream = (
@@ -274,7 +274,7 @@ def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         _stage(odd.filter(F.col("doc_id") % 4 == 1), "00_batch.parquet", 1_000_000_000)
         _stage(odd.filter(F.col("doc_id") % 4 == 3), "01_batch.parquet", 1_000_000_100)
 
-        schema = spark.read.parquet(os.path.join(staging, "00_batch.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_batch.parquet")).schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -360,7 +360,7 @@ def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage(late.filter(F.col("vec_id") % 4 == 1), "00_batch.parquet", 1_000_000_000)
         _stage(late.filter(F.col("vec_id") % 4 == 3), "01_batch.parquet", 1_000_000_100)
 
-        schema = spark.read.parquet(os.path.join(staging, "00_batch.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_batch.parquet")).schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -507,7 +507,7 @@ def _staged_outer_join_drain(spark: SparkSession, sf_dir: str, join_fn) -> DataF
             1_000_000_200,
         )
 
-        schema = spark.read.parquet(os.path.join(staging, "00_main.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_main.parquet")).schema
 
         def _src() -> DataFrame:
             return (
@@ -763,7 +763,7 @@ def _scd1_merge(batch_df: DataFrame, target: str) -> None:
     latest = _scd1_latest(batch_df)
     if os.path.exists(target):
         latest = _scd1_latest(
-            batch_df.sparkSession.read.parquet(target).unionByName(latest)
+            read_parquet(batch_df.sparkSession, target).unionByName(latest)
         )
     _staged_overwrite(latest, target, "._scd1-")
 
@@ -801,7 +801,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     path = table_path(sf_dir, "orders")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "orders.parquet")
@@ -822,7 +822,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     assert q.awaitTermination(420), "streaming upsert did not finish"
-    return spark.read.parquet(target).select(
+    return read_parquet(spark, target).select(
         "o_custkey",
         F.col("o_orderpriority").alias("current_priority"),
         F.col("o_orderdate").alias("last_change"),
@@ -1078,7 +1078,7 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         _promote(carrier_tmp, "01_carrier.parquet", 1_000_000_100)
         _promote(late_tmp, "02_late.parquet", 1_000_000_200)
 
-        schema = spark.read.parquet(os.path.join(staging, "00_main.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_main.parquet")).schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")

@@ -46,6 +46,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from csv_parquet_s3_spark.sources.tables import read_parquet
+
 logger = logging.getLogger(__name__)
 
 AUDIT_SCHEMA = T.StructType(
@@ -120,7 +122,7 @@ class Purger:
             df.write.mode("append").parquet(self.audit_path)
 
     def _load(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._table_path(table))
+        return read_parquet(self.spark, self._table_path(table))
 
     def _overwrite(self, table: str, df: DataFrame) -> None:
         """Staged rewrite through the shared commit step

@@ -2,17 +2,21 @@
 
 A "table" is a directory-or-file of Parquet, mirroring the reference's
 dataset-as-directory-of-files model (SURVEY.md §1.1, ``Main.java:34-37``).
-Reads go through ``spark.read.parquet`` so Catalyst gets filter pushdown and
-column pruning for free; at 100 TB each table is just a bigger directory with
-the same code path.
+Every parquet read of the package goes through :func:`read_parquet`, so
+Catalyst gets filter pushdown and column pruning for free and a table's
+schema is inferred once per file fingerprint, not once per query; at 100 TB
+each table is just a bigger directory with the same code path.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -65,27 +69,13 @@ def _gate_bytes() -> int:
 
 BROADCAST_GATE_BYTES = _gate_bytes()
 
-_TABLE_BYTES_CACHE: dict[tuple[str, str], int] = {}
-
-
 def source_table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk parquet bytes of a table (file or directory); cached per
-    (sf_dir, table). Returns a huge sentinel for paths that cannot be
-    statted locally (remote roots) so callers fail toward *not* hinting."""
-    key = (os.path.normpath(sf_dir), name)
-    cached = _TABLE_BYTES_CACHE.get(key)
-    if cached is None:
-        path = table_path(sf_dir, name)
-        if os.path.isfile(path):
-            cached = os.path.getsize(path)
-        elif os.path.isdir(path):
-            from csv_parquet_s3_spark.maintenance import dataset_bytes
-
-            cached = dataset_bytes(path)
-        else:  # remote / unstattable: never claim small
-            cached = 1 << 62
-        _TABLE_BYTES_CACHE[key] = cached
-    return cached
+    """On-disk parquet bytes of a table (file or directory), summed from its
+    current :func:`fingerprint`, so a table that grows is re-measured.
+    Returns a huge sentinel for paths that cannot be statted locally
+    (remote roots) so callers fail toward *not* hinting."""
+    fp = fingerprint(table_path(sf_dir, name))
+    return 1 << 62 if fp is None else sum(size for _f, size, _mtime in fp)
 
 
 def broadcast_if_small(
@@ -124,6 +114,74 @@ def clear_bucketed_overrides() -> None:
     _BUCKETED_OVERRIDES.clear()
 
 
+# Session confs that change what inference derives from the same footers;
+# part of the schema cache key, so flipping one re-infers.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# paths -> (fingerprints + confs, schema): one entry per path tuple,
+# replaced when its files or the confs change. Each entry is swapped whole,
+# so two threads racing on one path cost at most one extra inference.
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+
+
+def _spark_visible(name: str) -> bool:
+    """Spark's file-listing filter: names starting with ``.`` or ``_``
+    (checksums, ``_SUCCESS``, ``_temporary``) are hidden, except
+    ``_``-prefixed partition directories (``_col=v``)."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def fingerprint(path: str) -> tuple | None:
+    """Sorted ``(file, size, mtime_ns)`` of every file Spark reads under a
+    local ``path`` (a file, or a directory listed recursively); ``None``
+    for a remote (``s3a://``) or unstattable path."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    path = os.path.abspath(url.path if url.scheme else path)
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if _spark_visible(d)]
+            for f in files:
+                if _spark_visible(f):
+                    full = os.path.join(root, f)
+                    fst = os.stat(full)
+                    out.append((full, fst.st_size, fst.st_mtime_ns))
+    except OSError:  # vanished mid-listing: let Spark infer (or raise)
+        return None
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """THE parquet read of the package: ``spark.read.parquet(*paths)`` with
+    the schema pinned from a cache. Inference runs a footer-reading Spark
+    job on every read; here it runs once per (file fingerprints, schema-
+    affecting confs) and later reads of the unchanged files go through
+    ``spark.read.schema(cached)``, which starts no job and plans the same.
+    A rewrite changes the fingerprint and re-infers. Paths without a local
+    fingerprint (``s3a://``) infer on every read, as before."""
+    prints = tuple(fingerprint(p) for p in paths)
+    if any(fp is None for fp in prints):
+        return spark.read.parquet(*paths)
+    key = (prints, tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    cached = _SCHEMAS.get(paths)
+    if cached is not None and cached[0] == key:
+        return spark.read.schema(cached[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _SCHEMAS[paths] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -138,7 +196,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (LTZ): with the session timezone pinned to UTC the NTZ→LTZ cast is
         # wall-clock-identity and matches DuckDB's naive read exactly.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn(
@@ -147,7 +205,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

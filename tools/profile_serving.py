@@ -45,7 +45,7 @@ def main() -> None:
     from csv_parquet_s3_spark.operators.similarity import _with_norm
     from csv_parquet_s3_spark.plans.materialize import released_after
     from csv_parquet_s3_spark.session import get_spark
-    from csv_parquet_s3_spark.sources.tables import load_table
+    from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 
     spark = get_spark(
         app_name="profile_serving",
@@ -81,14 +81,14 @@ def main() -> None:
 
     # ---- BM25 serving prefixes --------------------------------------------
     def bm25_qterms():
-        doc_tf = spark.read.parquet(f"{bm25_root}/doc_tf")
+        doc_tf = read_parquet(spark, f"{bm25_root}/doc_tf")
         return doc_tf.filter(F.col("doc_id") < R.N_QUERIES).select(
             F.col("doc_id").alias("query_id"), "token"
         )
 
     def bm25_enriched():
-        doc_tf = spark.read.parquet(f"{bm25_root}/doc_tf")
-        df = spark.read.parquet(f"{bm25_root}/df")
+        doc_tf = read_parquet(spark, f"{bm25_root}/doc_tf")
+        df = read_parquet(spark, f"{bm25_root}/df")
         n_docs, avgdl = R._bm25_stats_scalars(spark, bm25_root)
         return (
             doc_tf.join(F.broadcast(bm25_qterms()), "token")
@@ -99,22 +99,8 @@ def main() -> None:
         )
 
     def bm25_scored():
-        e = bm25_enriched()
-        idf6 = F.round(
-            F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            6,
-        )
-        tf_w = (
-            F.col("tf")
-            * (R.BM25_K1 + 1.0)
-            / (
-                F.col("tf")
-                + R.BM25_K1
-                * (1.0 - R.BM25_B + R.BM25_B * F.col("dl") / F.col("avgdl"))
-            )
-        )
-        return e.groupBy("query_id", "doc_id").agg(
-            F.sum(F.round(idf6 * tf_w, 6).cast("decimal(20,6)")).alias("score_sum")
+        return bm25_enriched().groupBy("query_id", "doc_id").agg(
+            F.sum(R._bm25_term_score()).alias("score_sum")
         )
 
     def bm25_full():
